@@ -790,14 +790,27 @@ object Dedup {
   /** [[admitAgainstMinHashStore]] through the generational store —
     * decisions are BIT-IDENTICAL to the flat form on the same admitted
     * history (semi-join against the same key set), which is what lets
-    * q151 gate compaction as a pure serving no-op.
+    * q151 gate compaction as a pure serving no-op. A store with no
+    * fragments yet admits every doc with `hit_bands = 0`.
     */
   def admitAgainstMinHashStoreGen(
       docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 128, bands: Int = 32,
-      root: String, portableKeys: Boolean = false): DataFrame =
-    admitAgainstKeys(docs, idCol, textCol, n, numHashes, bands,
-      KeySetStore.keysCurrent(docs.sparkSession, root), portableKeys)
+      root: String, portableKeys: Boolean = false): DataFrame = {
+    val keys = minHashBandKeys(docs, idCol, textCol, n, numHashes, bands,
+      portableKeys)
+    decideAgainstKeys(docs.select(col(idCol).as("id")), keys,
+      storeKeysOrEmpty(root, keys))
+  }
+
+  /** The current key set of the store at `root` or, on a store with no
+    * fragments yet, `probe` emptied (`limit(0)` — Catalyst folds the
+    * probe against it away): the empty-store answer, nothing collides,
+    * from the same decision plan.
+    */
+  private def storeKeysOrEmpty(root: String, probe: DataFrame): DataFrame =
+    KeySetStore.keysCurrentIfAny(probe.sparkSession, root)
+      .getOrElse(probe.limit(0))
 
   /** [[admitAgainstMinHashStoreGen]] at a PINNED generation — the
     * manifest-resolved read (q152/q168): same decision logic over
@@ -876,8 +889,7 @@ object Dedup {
     */
   def admitKeysAgainstMinHashStoreGen(ids: DataFrame, keys: DataFrame,
       root: String): DataFrame =
-    decideAgainstKeys(ids, keys,
-      KeySetStore.keysCurrent(ids.sparkSession, root))
+    decideAgainstKeys(ids, keys, storeKeysOrEmpty(root, keys))
 
   /** [[admitAgainstMinHashStoreAt]] from precomputed keys — the
     * manifest-pinned probe (q152/q168) from one signature pass.
@@ -929,13 +941,15 @@ object Dedup {
         portableKeys).select(col("g")),
       batchId, root)
 
-  /** [[spansAgainstStore]] through the generational store. */
+  /** [[spansAgainstStore]] through the generational store (no spans
+    * against a store with no fragments yet).
+    */
   def spansAgainstStoreGen(
       docs: DataFrame, idCol: String, textCol: String, minTokens: Int,
       root: String, portableKeys: Boolean = false): DataFrame = {
     val tok = tokenized(docs, idCol, textCol, minTokens)
     val grams = gramPostings(tok, minTokens, portableKeys)
-    val store = KeySetStore.keysCurrent(docs.sparkSession, root).select(col("g"))
+    val store = storeKeysOrEmpty(root, grams).select(col("g"))
     val dupPos = grams.join(store, Seq("g"), "left_semi")
       .select(col("doc_id"), col("pos"))
     spansFromPositions(dupPos, tok, minTokens)

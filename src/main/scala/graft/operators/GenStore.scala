@@ -1,15 +1,30 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The shared generational-store primitives of the admission-store
-  * family: an atomic `_CURRENT` generation pointer, per-generation
-  * directories, batch-fragment listing, and the `_COMPACTED`
-  * high-water seal. [[InvertedIndex]] (postings/doclens/stats) and
-  * [[SketchStore]] (per-key HLL rows) compact through this;
-  * [[VectorStore]] predates it with the same discipline (its
-  * generations also hold an index artifact, so its pointer logic stays
-  * local).
+/** The store lifecycle of the admission-store family, owned once. Each
+  * store keeps only its payload — what a fragment holds, how fragments
+  * fold, its read surface — and calls into this object for:
+  *
+  *  - the on-disk primitives: the atomic `_CURRENT` generation pointer,
+  *    per-generation directories, batch-fragment listing, the
+  *    `_COMPACTED` seal and the `_DELETES_HWM` delete-id mark;
+  *  - the ADMISSION FENCE ([[fenced]]) every admit/delete front of
+  *    [[KeySetStore]], [[SketchStore]], [[HeavyHitters]],
+  *    [[QuantileStore]], [[InvertedIndex]] and [[VectorStore]] runs
+  *    around its write: quiesce check, sealed-id (or delete-id) check,
+  *    post-write quiesce re-check, pointer re-read;
+  *  - the GENERATION ROLL ([[roll]]) the flat-fragment stores compact
+  *    and rebuild through ([[KeySetStore]], [[SketchStore]],
+  *    [[HeavyHitters]], [[QuantileStore]]): CAS on the expected
+  *    generation, listing, build of `gen=G+1`, straggler sweep, seal,
+  *    publish, sweep. [[InvertedIndex]] (three tables per fragment)
+  *    and [[VectorStore]] (generations also hold an index artifact)
+  *    keep their own compaction bodies on the same primitives;
+  *  - the FRAGMENT-COUNT POLICY ([[compactIfFragmented]],
+  *    [[needsCompaction]], [[fragmentStatus]]) of the flat stores;
+  *  - federation merge of flat stores ([[mergeFlatStores]]), live-merge
+  *    quiesce, retirement and generation vacuum.
   *
   * Layout under one root:
   * {{{
@@ -55,6 +70,13 @@ object GenStore {
 
   /** One generation's directory. */
   def genDir(root: String, gen: Long): String = s"$root/gen=$gen"
+
+  /** Fragments of the current generation (under `table`, for stores
+    * whose fragments span several tables).
+    */
+  private[graft] def fragmentCount(spark: SparkSession, root: String,
+      table: String = ""): Long =
+    listBatchIds(spark, genDir(root, currentGen(root)) + table).size.toLong
 
   /** Batch ids of the fragments under `dir`, ascending. */
   def listBatchIds(spark: SparkSession, dir: String): Seq[Long] = {
@@ -211,6 +233,63 @@ object GenStore {
           "re-admit at the successor (the quiesced source is never " +
           "served once retired)")
     }
+
+  /** What an admission front writes, for [[fenced]]: a DATA fragment
+    * (its id must clear the generation's compaction seal — `refusal`
+    * ends that error, `noun` names the write in the post-write errors)
+    * or a DELETE fragment (its id must clear the merge-renumbered
+    * delete-id mark, [[deletesHwm]]; no seal — delete replays are
+    * semantic no-ops).
+    */
+  private[graft] sealed abstract class Front(val noun: String)
+  private[graft] final case class Data(
+      refusal: String = "replays of compacted batches are refused",
+      override val noun: String = "admit of") extends Front(noun)
+  private[graft] case object Deletes extends Front("delete")
+
+  /** THE ADMISSION FENCE every store's admit/delete front runs around
+    * its `write` (handed the generation to write under):
+    *  - before: refuse a quiesced store ([[requireNotQuiesced]]), read
+    *    the current generation (or take `at`, the pointer the caller
+    *    already read — the race-test seam), refuse a sealed batch id
+    *    (a per-batch overwrite would replace the MERGED fragment) or a
+    *    delete id at or below [[deletesHwm]];
+    *  - after: [[requireStillNotQuiesced]], then re-read the pointer —
+    *    if a compaction/refit (`raced`) published meanwhile, the write
+    *    landed in a superseded generation it may not have seen, so the
+    *    front throws and its caller re-admits under the current one.
+    *  Together with the roll's straggler sweep, an admission racing a
+    *  compaction either lands in both generations or throws — never
+    *  silently vanishes.
+    */
+  private[graft] def fenced(root: String, batchId: Long, front: Front = Data(),
+      at: Option[Long] = None, raced: String = "compaction")(
+      write: Long => Unit): Unit = {
+    requireNotQuiesced(root)
+    val g = at.getOrElse(currentGen(root))
+    front match {
+      case Data(refusal, _) =>
+        val hwm = compactedHwm(root, g)
+        require(batchId > hwm,
+          s"batch_id=$batchId is at or below gen=$g's compacted high-water " +
+            s"mark $hwm: compaction sealed it; $refusal")
+      case Deletes =>
+        val dhwm = deletesHwm(root, g)
+        require(batchId > dhwm,
+          s"delete batch_id=$batchId is at or below gen=$g's delete-id " +
+            s"high-water mark $dhwm: a federation merge renumbered carried " +
+            "delete fragments into that id space — admitting under one of " +
+            "those ids would clobber a pending takedown; use a fresh id above " +
+            "the mark")
+    }
+    write(g)
+    val what = s"${front.noun} batch_id=$batchId"
+    requireStillNotQuiesced(root, what)
+    val now = currentGen(root)
+    if (now != g) throw new IllegalStateException(
+      s"$what raced a $raced: wrote under gen=$g but _CURRENT is now " +
+        s"gen=$now — re-admit under the current generation")
+  }
 
   /** ABORT a quiesce — the guarded escape hatch for a quiesce issued in
     * error (wrong successor path, merge plans cancelled). Allowed ONLY
@@ -502,6 +581,152 @@ object GenStore {
       needs))
       .toDF("generation", "fragments", "data_rows", "pending_rows",
         "pending_fraction", "needs_compaction")
+  }
+
+  // -------------------------------------------------------------------------
+  // GENERATION ROLL + FRAGMENT-COUNT POLICY of the flat-fragment stores
+  // (fragments directly under the generation directory, an optional
+  // `deletes/` table beside them).
+  // -------------------------------------------------------------------------
+
+  /** The source side of one generation roll, as its build step sees
+    * it: the source generation `gen` and its directory, the directory
+    * of `gen=G+1`, the FULL fragment listing, the retained subset the
+    * build folds, and the listed delete fragments (empty unless the
+    * roll carries deletes).
+    */
+  private[graft] final case class Roll(spark: SparkSession, gen: Long,
+      src: String, dst: String, allIds: Seq[Long], ids: Seq[Long],
+      delIds: Seq[Long]) {
+    /** The LISTED fragments `is` (of `table`), read by explicit path:
+      * parquet listing is lazy, so a directory-wide read could fold a
+      * straggler admitted after the listing into the build AND the
+      * sweep — double-counting it in every additive store.
+      */
+    def read(is: Seq[Long], table: String = ""): DataFrame =
+      spark.read.parquet(is.map(i => s"$src$table/batch_id=$i"): _*)
+  }
+
+  /** ROLL the current generation into `gen=G+1` — the skeleton every
+    * flat-store compaction and scoped rebuild shares:
+    *  1. compare-and-swap on `expectedGen`: a retry after success (or a
+    *     racing second roll) returns the current generation untouched;
+    *  2. list the fragments (`retain` picks the ones the build folds;
+    *     the seal still covers the full listing) and, with `deletes`,
+    *     the delete fragments; then `midHook` — the race-test seam;
+    *  3. `build` writes `gen=G+1` from the listing and returns the
+    *     seal's high-water mark;
+    *  4. STRAGGLER SWEEP: fragments admitted to `gen=G` since the listing
+    *     are re-listed and copied through unmerged (`carry` transforms
+    *     each data straggler; delete stragglers ride through pending) —
+    *     once before the seal and once after the pointer moves, so an
+    *     admit racing the roll either lands in the new generation or
+    *     throws at its own pointer re-read ([[fenced]]);
+    *  5. seal, then publish behind the atomic pointer.
+    *  Readers are generation-isolated throughout; a crash before the
+    *  publish leaves an unpublished `gen=G+1` the retry overwrites.
+    */
+  private[graft] def roll(spark: SparkSession, root: String,
+      expectedGen: Long, midHook: () => Unit = () => (),
+      verb: String = "compact", retain: Long => Boolean = _ => true,
+      deletes: Boolean = false,
+      carry: Roll => DataFrame => DataFrame = _ => identity)(
+      build: Roll => Long): Long = {
+    val cur = currentGen(root)
+    if (cur != expectedGen) return cur
+    val src = genDir(root, cur)
+    val allIds = listBatchIds(spark, src)
+    require(allIds.nonEmpty, s"nothing to $verb under $src")
+    val ids = allIds.filter(retain)
+    require(ids.nonEmpty,
+      "retention would empty the store — at least one fragment must " +
+        "survive; to drop everything, initialize a fresh root instead")
+    val delIds = if (deletes) listBatchIds(spark, s"$src/deletes") else Nil
+    midHook()
+    val r = Roll(spark, cur, src, genDir(root, cur + 1), allIds, ids, delIds)
+    val hwm = build(r)
+    val carried = carry(r)
+    def copy(from: String, to: String, f: DataFrame => DataFrame): Unit =
+      f(spark.read.parquet(from)).write.mode("overwrite").parquet(to)
+    def sweep(): Unit = {
+      // subtract the FULL listing (an expired fragment is not a
+      // straggler — copying it back would undo the retention)
+      (listBatchIds(spark, src).toSet -- allIds).filter(retain).toSeq.sorted
+        .foreach(i => copy(s"$src/batch_id=$i", s"${r.dst}/batch_id=$i", carried))
+      if (deletes)
+        (listBatchIds(spark, s"$src/deletes").toSet -- delIds).toSeq.sorted
+          .foreach(i => copy(s"$src/deletes/batch_id=$i",
+            s"${r.dst}/deletes/batch_id=$i", identity))
+    }
+    sweep()
+    seal(root, cur + 1, hwm)
+    writePointer(root, cur + 1)
+    sweep()
+    cur + 1
+  }
+
+  /** The continuous-compaction policy: run `compact` on the current
+    * generation once `maxFragments` fragments (of `table`) accumulate.
+    * Returns the new generation when it fired.
+    */
+  private[graft] def compactIfFragmented(spark: SparkSession, root: String,
+      maxFragments: Int, table: String = "")(
+      compact: Long => Long): Option[Long] =
+    if (!needsCompaction(spark, root, maxFragments, table)()) None
+    else Some(compact(currentGen(root)))
+
+  /** The COMPACTION-POLICY predicate: true once the current
+    * generation's fragments (of `table`) reach `maxFragments` (read
+    * amplification) or — for a store with a delete surface, where
+    * `maxPendingFraction` is given — once the pending delete rows grow
+    * past that fraction of `dataRows(genDir, fragment ids)`: every read
+    * pays that anti-join until a compaction folds it away, so this
+    * bounds the takedown serving window by CONTRACT. The pending side
+    * is parquet footers only ([[footerRowCount]]) and `dataRows` runs
+    * only when deletes are pending, so a maintenance tick can afford it
+    * every batch. A store with no fragments needs nothing (deletes
+    * alone can wait).
+    */
+  private[graft] def needsCompaction(spark: SparkSession, root: String,
+      maxFragments: Int, table: String = "",
+      maxPendingFraction: Option[Double] = None)(
+      dataRows: (String, Seq[Long]) => Long = (_, _) => 0L): Boolean = {
+    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
+    maxPendingFraction.foreach(f =>
+      require(f > 0, "maxPendingFraction must be positive"))
+    val dir = genDir(root, currentGen(root))
+    val ids = listBatchIds(spark, dir + table)
+    if (ids.isEmpty) false
+    else if (ids.size >= maxFragments) true
+    else maxPendingFraction.exists { f =>
+      val pending = footerRowCount(spark, Seq(s"$dir/deletes"))
+      pending > 0 && pending.toDouble >= f * dataRows(dir, ids)
+    }
+  }
+
+  /** The maintenance dashboard row the family's `maintenanceStatus`
+    * returns — (generation, fragments, data_rows, pending_rows,
+    * pending_fraction, needs_compaction) for the current generation,
+    * the inputs of the store's compaction predicate `needs`, so a
+    * scheduler (or a human) can see WHY a tick will or won't fire.
+    * Fragments are those of `table`; data rows the footer counts of
+    * `dataTable`'s fragments; pending rows the `deletes/` footer count,
+    * structurally zero for a store without a delete surface
+    * (`deletes = false`), which the row states rather than hides.
+    */
+  private[graft] def fragmentStatus(spark: SparkSession, root: String,
+      needs: => Boolean, table: String = "", dataTable: String = "",
+      deletes: Boolean = false): DataFrame = {
+    val gen = currentGen(root)
+    val dir = genDir(root, gen)
+    val ids = listBatchIds(spark, dir + table)
+    val dataIds =
+      if (dataTable == table) ids else listBatchIds(spark, dir + dataTable)
+    val data = footerRowCount(spark,
+      dataIds.map(i => s"$dir$dataTable/batch_id=$i"))
+    val pending =
+      if (deletes) footerRowCount(spark, Seq(s"$dir/deletes")) else 0L
+    statusRow(spark, gen, ids.size.toLong, data, pending, needs)
   }
 
   /** Total row count under `dirs`, read from parquet FOOTERS only —

@@ -494,8 +494,7 @@ object InvertedIndex {
     * postings table — the quantity compaction exists to bound.
     */
   def fragmentCount(spark: SparkSession, root: String): Long =
-    GenStore.listBatchIds(spark,
-      genDir(root, currentGen(root)) + "/postings").size.toLong
+    GenStore.fragmentCount(spark, root, "/postings")
 
   /** The compacted high-water mark of a generation ([[GenStore
     * .compactedHwm]]): -1 for a never-compacted generation; batch ids
@@ -505,13 +504,9 @@ object InvertedIndex {
     GenStore.compactedHwm(root, gen)
 
   /** Admit one tokenized batch under the CURRENT generation (the
-    * [[appendBatch]] pass routed through the pointer), with two fences:
-    * batch ids at or below the generation's compacted high-water mark
-    * are refused (they are INSIDE the compacted fragment — a replay
-    * would duplicate their postings), and the pointer is re-read after
-    * the write so an admission racing a compaction fails loudly instead
-    * of landing invisibly in a superseded generation (the
-    * [[VectorStore.admit]] discipline).
+    * [[appendBatch]] pass routed through the pointer), inside the
+    * admission fence ([[GenStore.fenced]]): a replay of a compacted id
+    * would duplicate its postings.
     */
   def admitBatch(spark: SparkSession, docs: DataFrame, idCol: String,
       toksCol: String, bucketSize: Long, batchId: Long, root: String): Unit =
@@ -523,29 +518,20 @@ object InvertedIndex {
     */
   private[graft] def admitBatchAt(spark: SparkSession, docs: DataFrame,
       idCol: String, toksCol: String, bucketSize: Long, batchId: Long,
-      root: String, gen: Long, midHook: () => Unit = () => ()): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val hwm = compactedHwm(root, gen)
-    require(batchId > hwm,
-      s"batch_id=$batchId is at or below gen=$gen's compacted high-water " +
-        s"mark $hwm: compaction sealed it; replays of compacted batches are refused")
-    appendBatch(docs, idCol, toksCol, bucketSize, batchId, genDir(root, gen))
-    midHook()
-    GenStore.requireStillNotQuiesced(root, s"admit of batch_id=$batchId")
-    val now = currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"admit of batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      root: String, gen: Long, midHook: () => Unit = () => ()): Unit =
+    GenStore.fenced(root, batchId, at = Some(gen)) { g =>
+      appendBatch(docs, idCol, toksCol, bucketSize, batchId, genDir(root, g))
+      midHook()
+    }
 
   /** TAKEDOWN: admit one batch of doc ids to delete under the CURRENT
     * generation ([[appendDeleteBatch]] routed through the pointer).
     * Every subsequent read excludes them; the next [[compactStore]]
-    * removes them physically. Same pointer-re-read fence as
-    * [[admitBatch]]; no sealed-id fence — replaying a delete batch is a
-    * semantic no-op whether or not a compaction already applied it
-    * (anti-joining an absent id removes nothing), as is deleting an id
-    * the store never admitted.
+    * removes them physically. The admission fence's delete form
+    * ([[GenStore.Deletes]]): no sealed-id check — replaying a delete
+    * batch is a semantic no-op whether or not a compaction already
+    * applied it (anti-joining an absent id removes nothing), as is
+    * deleting an id the store never admitted.
     */
   def admitDeleteBatch(spark: SparkSession, ids: DataFrame, idCol: String,
       batchId: Long, root: String): Unit =
@@ -556,22 +542,10 @@ object InvertedIndex {
     */
   private[graft] def admitDeleteBatchAt(spark: SparkSession, ids: DataFrame,
       idCol: String, batchId: Long, root: String, gen: Long,
-      hwm: Long = Long.MaxValue): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val dhwm = GenStore.deletesHwm(root, gen)
-    require(batchId > dhwm,
-      s"delete batch_id=$batchId is at or below gen=$gen's delete-id " +
-        s"high-water mark $dhwm: a federation merge renumbered carried " +
-        "delete fragments into that id space — admitting under one of " +
-        "those ids would clobber a pending takedown; use a fresh id above " +
-        "the mark")
-    appendDeleteBatch(ids, idCol, batchId, genDir(root, gen), hwm)
-    GenStore.requireStillNotQuiesced(root, s"delete batch_id=$batchId")
-    val now = currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"delete batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      hwm: Long = Long.MaxValue): Unit =
+    GenStore.fenced(root, batchId, GenStore.Deletes, Some(gen)) { g =>
+      appendDeleteBatch(ids, idCol, batchId, genDir(root, g), hwm)
+    }
 
   /** UPSERT one batch of documents: a SCOPED delete at `hwm = batchId -
     * 1` (masks every copy admitted so far — for a new doc it masks
@@ -629,14 +603,8 @@ object InvertedIndex {
     * batch-count structs, never a term's full df — plus narrow unions;
     * the raw corpus is never touched.
     *
-    * Straggler discipline ([[KeySetStore.compactStore]] /
-    * [[VectorStore.compactGen]]): a batch admitted to `gen=G` AFTER the
-    * fragment listing would otherwise vanish from `gen=G+1` while its
-    * admit reported success (its pointer re-check can run before the
-    * publish). The source generation is therefore re-listed and any new
-    * batch copied through unmerged — once before the seal, once after
-    * the pointer move; an admit landing later than that re-checks the
-    * pointer itself and throws.
+    * Straggler discipline: [[GenStore.roll]]'s sweep, restated over
+    * this store's three tables in [[compactStoreHooked]].
     */
   def compactStore(spark: SparkSession, root: String, expectedGen: Long): Long =
     compactStoreHooked(spark, root, expectedGen, () => ())
@@ -950,21 +918,17 @@ object InvertedIndex {
     cur + 1
   }
 
-  /** The compaction POLICY: compact the current generation when its
-    * fragment count has reached `maxFragments` (the dial that bounds
-    * steady-state read amplification: reads touch at most
-    * maxFragments-1 appended fragments plus the compacted one between
-    * policy firings). Returns the new generation if a compaction ran.
-    * Single-writer discipline as everywhere in the store lifecycle.
+  /** The compaction POLICY ([[GenStore.compactIfFragmented]] over the
+    * postings fragments): the dial that bounds steady-state read
+    * amplification — reads touch at most maxFragments-1 appended
+    * fragments plus the compacted one between policy firings.
     */
   def compactIfFragmented(spark: SparkSession, root: String,
-      maxFragments: Int): Option[Long] = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    if (fragmentCount(spark, root) < maxFragments) None
-    else Some(compactStore(spark, root, currentGen(root)))
-  }
+      maxFragments: Int): Option[Long] =
+    GenStore.compactIfFragmented(spark, root, maxFragments, "/postings")(
+      compactStore(spark, root, _))
 
-  /** The COMPACTION-POLICY predicate ([[KeySetStore.needsCompaction]]'s
+  /** The COMPACTION-POLICY predicate ([[GenStore.needsCompaction]]'s
     * shape for this store): true when the fragment count reached
     * `maxFragments` OR pending-delete ids grew past `maxPendingFraction`
     * of the indexed documents — the r12-measured 1.61× pending-read tax
@@ -974,23 +938,13 @@ object InvertedIndex {
     * cardinalities come from parquet footers, never a Spark job.
     */
   def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    require(maxPendingFraction > 0, "maxPendingFraction must be positive")
-    val dir = genDir(root, currentGen(root))
-    val ids = GenStore.listBatchIds(spark, s"$dir/postings")
-    if (ids.isEmpty) false
-    else if (ids.size >= maxFragments) true
-    else {
-      val pending = GenStore.footerRowCount(spark, Seq(s"$dir/deletes"))
-      pending > 0 && {
-        val docs = GenStore.footerRowCount(spark,
-          GenStore.listBatchIds(spark, s"$dir/doclens")
-            .map(i => s"$dir/doclens/batch_id=$i"))
-        pending.toDouble >= maxPendingFraction * docs
-      }
+      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean =
+    GenStore.needsCompaction(spark, root, maxFragments, "/postings",
+        Some(maxPendingFraction)) { (dir, _) =>
+      GenStore.footerRowCount(spark,
+        GenStore.listBatchIds(spark, s"$dir/doclens")
+          .map(i => s"$dir/doclens/batch_id=$i"))
     }
-  }
 
   /** Run [[compactStore]] when [[needsCompaction]] says so. */
   def compactIfNeeded(spark: SparkSession, root: String,
@@ -999,23 +953,16 @@ object InvertedIndex {
     if (!needsCompaction(spark, root, maxFragments, maxPendingFraction)) None
     else Some(compactStore(spark, root, currentGen(root)))
 
-  /** The maintenance dashboard row ([[KeySetStore.maintenanceStatus]]'s
+  /** The maintenance dashboard row ([[GenStore.fragmentStatus]]'s
     * shape): data cardinality is the doclens row count (one row per
     * indexed doc), pending is the delete-marker row count — footer
     * reads only.
     */
   def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame = {
-    val gen = currentGen(root)
-    val dir = genDir(root, gen)
-    val frags = GenStore.listBatchIds(spark, s"$dir/postings").size.toLong
-    val docs = GenStore.footerRowCount(spark,
-      GenStore.listBatchIds(spark, s"$dir/doclens")
-        .map(i => s"$dir/doclens/batch_id=$i"))
-    val pending = GenStore.footerRowCount(spark, Seq(s"$dir/deletes"))
-    GenStore.statusRow(spark, gen, frags, docs, pending,
-      needsCompaction(spark, root, maxFragments, maxPendingFraction))
-  }
+      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame =
+    GenStore.fragmentStatus(spark, root,
+      needsCompaction(spark, root, maxFragments, maxPendingFraction),
+      "/postings", "/doclens", deletes = true)
 
   /** [[storeLookup]] through the pointer. */
   def lookupCurrent(spark: SparkSession, root: String,

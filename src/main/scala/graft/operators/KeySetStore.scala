@@ -23,12 +23,10 @@ import org.apache.spark.sql.functions._
   * nothing, which is also why the compacted store serves BIT-IDENTICAL
   * admission decisions (the gate q151 states).
   *
-  * Lifecycle contract (shared with the family): CAS compaction on
-  * `expectedGen` (retry no-ops), `_COMPACTED` seal refuses replays of
-  * merged batch ids (a per-batch overwrite would silently drop every
-  * OTHER batch's keys that were merged into the fragment), post-write
-  * pointer re-check fences an admit racing a compaction, straggler
-  * sweep re-lists around the pointer move.
+  * Lifecycle: [[GenStore]]'s admission fence and generation roll. The
+  * `_COMPACTED` seal matters here because a per-batch overwrite of a
+  * merged id would silently drop every OTHER batch's keys that were
+  * merged into the fragment.
   */
 object KeySetStore {
 
@@ -40,16 +38,11 @@ object KeySetStore {
 
   /** Fragments of the current generation. */
   def fragmentCount(spark: SparkSession, root: String): Long =
-    GenStore.listBatchIds(spark,
-      GenStore.genDir(root, GenStore.currentGen(root))).size.toLong
+    GenStore.fragmentCount(spark, root)
 
   /** Admit one batch's key rows (made distinct here) under the CURRENT
-    * generation, with the family's sealed-id and pointer-recheck fences
-    * plus the post-write quiesce re-check
-    * ([[GenStore.requireStillNotQuiesced]] — an admission completing
-    * inside a live merge's copy-to-seal gap must fail loudly, never be
-    * silently absent from the merged store). Idempotent per batch id
-    * (mode overwrite).
+    * generation, through the admission fence ([[GenStore.fenced]]).
+    * Idempotent per batch id (mode overwrite).
     */
   def admitBatch(keys: DataFrame, batchId: Long, root: String): Unit =
     admitBatchHooked(keys, batchId, root, () => ())
@@ -60,23 +53,14 @@ object KeySetStore {
     * THIS admission throw, so its caller re-admits at the successor.
     */
   private[graft] def admitBatchHooked(keys: DataFrame, batchId: Long,
-      root: String, midHook: () => Unit): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val gen = GenStore.currentGen(root)
-    val hwm = GenStore.compactedHwm(root, gen)
-    require(batchId > hwm,
-      s"batch_id=$batchId is at or below gen=$gen's compacted high-water " +
-        s"mark $hwm: compaction sealed it; replays of compacted batches are " +
-        "refused (a per-batch overwrite would drop the other merged batches' keys)")
-    keys.distinct().write.mode("overwrite")
-      .parquet(s"${GenStore.genDir(root, gen)}/batch_id=$batchId")
-    midHook()
-    GenStore.requireStillNotQuiesced(root, s"admit of batch_id=$batchId")
-    val now = GenStore.currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"admit of batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      root: String, midHook: () => Unit): Unit =
+    GenStore.fenced(root, batchId, GenStore.Data("replays of compacted " +
+        "batches are refused (a per-batch overwrite would drop the other " +
+        "merged batches' keys)")) { gen =>
+      keys.distinct().write.mode("overwrite")
+        .parquet(s"${GenStore.genDir(root, gen)}/batch_id=$batchId")
+      midHook()
+    }
 
   // ---------------------------------------------------------------------
   // DELETION/TAKEDOWN — the q161 LSM delete-marker discipline
@@ -101,27 +85,14 @@ object KeySetStore {
     * `deletes/batch_id=N` (same schema as the data fragments). Replays
     * are semantic no-ops whether or not a compaction already applied
     * them — subtracting an absent key removes nothing — so there is no
-    * compaction seal on delete ids, only the family's pointer re-check
-    * plus the merge-renumbered-id fence ([[GenStore.deletesHwm]]).
+    * compaction seal on delete ids, only the fence's delete-id check
+    * ([[GenStore.fenced]] with [[GenStore.Deletes]]).
     */
-  def admitDeleteBatch(keys: DataFrame, batchId: Long, root: String): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val gen = GenStore.currentGen(root)
-    val dhwm = GenStore.deletesHwm(root, gen)
-    require(batchId > dhwm,
-      s"delete batch_id=$batchId is at or below gen=$gen's delete-id " +
-        s"high-water mark $dhwm: a federation merge renumbered carried " +
-        "delete fragments into that id space — admitting under one of " +
-        "those ids would clobber a pending takedown; use a fresh id above " +
-        "the mark")
-    keys.distinct().write.mode("overwrite")
-      .parquet(s"${GenStore.genDir(root, gen)}/deletes/batch_id=$batchId")
-    GenStore.requireStillNotQuiesced(root, s"delete batch_id=$batchId")
-    val now = GenStore.currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"delete batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+  def admitDeleteBatch(keys: DataFrame, batchId: Long, root: String): Unit =
+    GenStore.fenced(root, batchId, GenStore.Deletes) { gen =>
+      keys.distinct().write.mode("overwrite")
+        .parquet(s"${GenStore.genDir(root, gen)}/deletes/batch_id=$batchId")
+    }
 
   /** Pending delete keys of one generation directory, or None when no
     * deletes were ever admitted (the zero-cost common case — read plans
@@ -183,9 +154,22 @@ object KeySetStore {
     * high-water mark refuses such replays before any probe runs.
     */
   def keysCurrentExcluding(spark: SparkSession, root: String,
-      excludeBatchId: Long): Option[DataFrame] = {
+      excludeBatchId: Long): Option[DataFrame] =
+    keysCurrentWhere(spark, root, _ != excludeBatchId)
+
+  /** [[keysCurrent]], or None on a store with no fragments yet (a
+    * freshly initialised root): the dedup probes then give the
+    * empty-store answer — nothing collides — where [[keysCurrent]]
+    * would refuse.
+    */
+  private[graft] def keysCurrentIfAny(spark: SparkSession,
+      root: String): Option[DataFrame] =
+    keysCurrentWhere(spark, root, _ => true)
+
+  private def keysCurrentWhere(spark: SparkSession, root: String,
+      keep: Long => Boolean): Option[DataFrame] = {
     val dir = GenStore.genDir(root, GenStore.currentGen(root))
-    val ids = GenStore.listBatchIds(spark, dir).filterNot(_ == excludeBatchId)
+    val ids = GenStore.listBatchIds(spark, dir).filter(keep)
     if (ids.isEmpty) None else Some(keysOf(spark, dir, ids))
   }
 
@@ -193,10 +177,9 @@ object KeySetStore {
     * ONCE, subtract the pending delete set, one sealed `batch_id=<hwm>`
     * fragment under `gen=G+1` behind the atomic pointer — the new
     * generation holds no trace of the deleted keys and no pending set,
-    * bit-identical to a store rebuilt from the surviving keys. CAS on
-    * `expectedGen`; straggler sweep as the family
-    * ([[VectorStore.compactGen]]), covering DELETE fragments too (a
-    * delete admitted after the listing rides through pending).
+    * bit-identical to a store rebuilt from the surviving keys — one
+    * [[GenStore.roll]], whose straggler sweep covers DELETE fragments
+    * too (a delete admitted after the listing rides through pending).
     */
   def compactStore(spark: SparkSession, root: String,
       expectedGen: Long): Long =
@@ -253,120 +236,70 @@ object KeySetStore {
     */
   private[graft] def compactStoreHooked(spark: SparkSession, root: String,
       expectedGen: Long, midHook: () => Unit,
-      retain: Long => Boolean = _ => true): Long = {
-    val cur = GenStore.currentGen(root)
-    if (cur != expectedGen) return cur
-    val ng = cur + 1
-    val src = GenStore.genDir(root, cur)
-    val dst = GenStore.genDir(root, ng)
-    val allIds = GenStore.listBatchIds(spark, src)
-    require(allIds.nonEmpty, s"nothing to compact under $src")
-    val ids = allIds.filter(retain)
-    require(ids.nonEmpty,
-      "retention would empty the store — at least one fragment must " +
-        "survive; to drop everything, initialize a fresh root instead")
-    // seal at the FULL listing's hwm: expired ids must refuse replay
-    val hwm = allIds.max
-    val delIds = GenStore.listBatchIds(spark, s"$src/deletes")
-    midHook()
-    // merge the LISTED fragments explicitly (parquet listing is lazy):
-    // a directory-wide read could fold a straggler admitted after the
-    // listing into the merge and the sweep both — harmless HERE (the
-    // key set is distinct, reads are semi-joins), but the family keeps
-    // one discipline so the lossy stores can't inherit the wrong shape
-    val merged = spark.read.parquet(ids.map(i => s"$src/batch_id=$i"): _*).distinct()
-    val survivors =
-      if (delIds.isEmpty) merged
-      else merged.join(
-        broadcast( // O(dead docs' keys) — see pendingDeletes
-          spark.read.parquet(delIds.map(i => s"$src/deletes/batch_id=$i"): _*)
-            .distinct()),
-        merged.columns.toSeq, "left_anti")
-    survivors.write.mode("overwrite").parquet(s"$dst/batch_id=$hwm")
-    // the LISTED delete set, re-applied to swept data stragglers below:
-    // a delete fragment captured in delIds can target keys of a data
-    // batch admitted AFTER the fragment listing (delete lands, listing
-    // runs, data batch admits inside the window) — the merge applied it
-    // only to the listed fragments, and it is NOT carried pending (the
-    // new generation must not re-subtract it from genuinely-later
-    // re-admissions), so the swept copy must subtract it here or the
-    // takedown silently vanishes. This matches read semantics exactly:
-    // pre-compaction, [[keysAt]] applied the pending set to EVERY
-    // fragment of the generation, stragglers included.
-    lazy val listedDel: Option[DataFrame] =
-      if (delIds.isEmpty) None
-      else Some(spark.read
-        .parquet(delIds.map(i => s"$src/deletes/batch_id=$i"): _*).distinct())
-    def sweep(): Unit = {
-      // subtract the FULL listing (an expired fragment is not a
-      // straggler) and retain-filter what remains
-      (GenStore.listBatchIds(spark, src).toSet -- allIds)
-        .filter(retain).toSeq.sorted.foreach { i =>
-        val raw = spark.read.parquet(s"$src/batch_id=$i")
-        listedDel.map(d =>
-            raw.join(broadcast(d), raw.columns.toSeq, "left_anti"))
-          .getOrElse(raw)
-          .write.mode("overwrite").parquet(s"$dst/batch_id=$i")
-      }
-      (GenStore.listBatchIds(spark, s"$src/deletes").toSet -- delIds).toSeq.sorted
-        .foreach { i =>
-          spark.read.parquet(s"$src/deletes/batch_id=$i")
-            .write.mode("overwrite").parquet(s"$dst/deletes/batch_id=$i")
-        }
+      retain: Long => Boolean = _ => true): Long =
+    GenStore.roll(spark, root, expectedGen, midHook, retain = retain,
+      deletes = true, carry = listedDeletesOn) { r =>
+      // the LISTED fragments only: a straggler belongs to the sweep —
+      // harmless twice HERE (the key set is distinct, reads are
+      // semi-joins), but the family keeps one discipline
+      val merged = r.read(r.ids).distinct()
+      val survivors =
+        if (r.delIds.isEmpty) merged
+        else merged.join(
+          broadcast( // O(dead docs' keys) — see pendingDeletes
+            r.read(r.delIds, "/deletes").distinct()),
+          merged.columns.toSeq, "left_anti")
+      // seal at the FULL listing's hwm: expired ids must refuse replay
+      val hwm = r.allIds.max
+      survivors.write.mode("overwrite").parquet(s"${r.dst}/batch_id=$hwm")
+      hwm
     }
-    sweep()
-    GenStore.seal(root, ng, hwm)
-    GenStore.writePointer(root, ng)
-    sweep()
-    ng
+
+  /** The LISTED delete set, re-applied to swept data stragglers: a
+    * delete fragment captured in the listing can target keys of a data
+    * batch admitted AFTER it (delete lands, listing runs, data batch
+    * admits inside the window) — the fold applied it only to the listed
+    * fragments, and it is NOT carried pending (the new generation must
+    * not re-subtract it from genuinely-later re-admissions), so the
+    * swept copy must subtract it or the takedown silently vanishes.
+    * This matches read semantics exactly: pre-compaction, [[keysAt]]
+    * applied the pending set to EVERY fragment, stragglers included.
+    */
+  private def listedDeletesOn(r: GenStore.Roll): DataFrame => DataFrame = {
+    lazy val listedDel: Option[DataFrame] =
+      if (r.delIds.isEmpty) None
+      else Some(r.read(r.delIds, "/deletes").distinct())
+    raw => listedDel.map(d =>
+        raw.join(broadcast(d), raw.columns.toSeq, "left_anti"))
+      .getOrElse(raw)
   }
 
-  /** The continuous-compaction policy ([[InvertedIndex
-    * .compactIfFragmented]]'s shape): compact once `maxFragments`
-    * accumulate. Returns the new generation when it fired.
+  /** The continuous-compaction policy ([[GenStore.compactIfFragmented]]):
+    * compact once `maxFragments` accumulate. Returns the new generation
+    * when it fired.
     */
   def compactIfFragmented(spark: SparkSession, root: String,
-      maxFragments: Int): Option[Long] = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    if (fragmentCount(spark, root) < maxFragments) None
-    else Some(compactStore(spark, root, GenStore.currentGen(root)))
-  }
+      maxFragments: Int): Option[Long] =
+    GenStore.compactIfFragmented(spark, root, maxFragments)(
+      compactStore(spark, root, _))
 
   /** Retention for superseded generations ([[GenStore.vacuum]]). */
   def vacuum(root: String, keepLast: Int): Seq[Long] =
     GenStore.vacuum(root, keepLast)
 
-  /** The COMPACTION-POLICY predicate — [[VectorStore.needsRefit]]'s
-    * twin for layout, closing the loop [[compactIfFragmented]] only
-    * half-closed: true when the fragment count reached `maxFragments`
-    * (read amplification) OR the pending-delete rows grew past
-    * `maxPendingFraction` of the data rows (every read pays that
-    * anti-join until a compaction folds it away — the takedown serving
-    * window, bounded by CONTRACT once this predicate drives the
-    * maintenance loop instead of operator diligence). Footer-metadata
-    * reads only ([[GenStore.footerRowCount]]): no Spark job, so a
-    * maintenance tick can evaluate it every batch. A store with
-    * pending deletes but no data rows compacts (the fraction is
-    * +infinity there).
+  /** The COMPACTION-POLICY predicate ([[GenStore.needsCompaction]]) —
+    * [[VectorStore.needsRefit]]'s twin for layout, closing the loop
+    * [[compactIfFragmented]] only half-closed: the fragment leg OR the
+    * pending-delete rows past `maxPendingFraction` of the data rows
+    * (footer counts). A store with pending deletes but no data rows
+    * compacts (the fraction is +infinity there).
     */
   def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    require(maxPendingFraction > 0, "maxPendingFraction must be positive")
-    val gen = GenStore.currentGen(root)
-    val dir = GenStore.genDir(root, gen)
-    val ids = GenStore.listBatchIds(spark, dir)
-    if (ids.isEmpty) false // nothing to compact (deletes alone can wait)
-    else if (ids.size >= maxFragments) true
-    else {
-      val pending = GenStore.footerRowCount(spark, Seq(s"$dir/deletes"))
-      pending > 0 && {
-        val data = GenStore.footerRowCount(spark,
-          ids.map(i => s"$dir/batch_id=$i"))
-        pending.toDouble >= maxPendingFraction * data
-      }
+      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean =
+    GenStore.needsCompaction(spark, root, maxFragments,
+        maxPendingFraction = Some(maxPendingFraction)) { (dir, ids) =>
+      GenStore.footerRowCount(spark, ids.map(i => s"$dir/batch_id=$i"))
     }
-  }
 
   /** Run [[compactStore]] when [[needsCompaction]] says so — the
     * maintenance-loop form that subsumes [[compactIfFragmented]] (same
@@ -379,21 +312,14 @@ object KeySetStore {
     if (!needsCompaction(spark, root, maxFragments, maxPendingFraction)) None
     else Some(compactStore(spark, root, GenStore.currentGen(root)))
 
-  /** The operational dashboard row the maintenance loop reads: one row
-    * of (generation, fragments, data_rows, pending_rows,
-    * pending_fraction, needs_compaction) for the current generation —
-    * the exact inputs [[needsCompaction]] evaluates, exposed so a
-    * scheduler (or a human) can see WHY a tick will or won't fire.
-    * Same footer-count cost model; no Spark job behind the frame.
+  /** The operational dashboard row the maintenance loop reads
+    * ([[GenStore.fragmentStatus]]): the exact inputs [[needsCompaction]]
+    * evaluates. Same footer-count cost model; no Spark job behind the
+    * frame.
     */
   def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame = {
-    val gen = GenStore.currentGen(root)
-    val dir = GenStore.genDir(root, gen)
-    val ids = GenStore.listBatchIds(spark, dir)
-    val data = GenStore.footerRowCount(spark, ids.map(i => s"$dir/batch_id=$i"))
-    val pending = GenStore.footerRowCount(spark, Seq(s"$dir/deletes"))
-    GenStore.statusRow(spark, gen, ids.size.toLong, data, pending,
-      needsCompaction(spark, root, maxFragments, maxPendingFraction))
-  }
+      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame =
+    GenStore.fragmentStatus(spark, root,
+      needsCompaction(spark, root, maxFragments, maxPendingFraction),
+      deletes = true)
 }

@@ -54,22 +54,24 @@ object Par {
   }
 
   /** [[both]] for N independent sections: thunks(0) runs on the calling
-    * thread, the rest on the pool; results keep input order.
+    * thread, the rest on the pool; results keep input order. EVERY
+    * section is awaited before anything propagates — a failing section
+    * never leaves a later one running after `all` has thrown — and then
+    * the first failure in input order is rethrown, unwrapped.
     */
   def all[A](thunks: Seq[() => A]): Seq[A] = {
     require(thunks.nonEmpty, "Par.all needs at least one section")
     val fs = thunks.tail.map(t =>
       pool.submit(new Callable[A] { def call(): A = t() }))
-    val r0 =
-      try thunks.head()
+    val r0: Either[Throwable, A] =
+      try Right(thunks.head()) catch { case t: Throwable => Left(t) }
+    val rs = fs.map { f =>
+      try Right(f.get())
       catch {
-        case t: Throwable =>
-          fs.foreach(f => try f.get() catch { case _: Throwable => () })
-          throw t
+        case e: ExecutionException => Left(e.getCause)
+        case t: Throwable => Left(t)
       }
-    r0 +: fs.map { f =>
-      try f.get()
-      catch { case e: ExecutionException => throw e.getCause }
     }
+    (r0 +: rs).map(_.fold(t => throw t, identity))
   }
 }

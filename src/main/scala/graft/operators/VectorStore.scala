@@ -57,7 +57,8 @@ import graft.functions.VectorFunctions
   */
 object VectorStore {
 
-  private def genRoot(root: String, gen: Long) = s"$root/gen=$gen"
+  // the pointer and generation primitives are [[GenStore]]'s
+  private def genRoot(root: String, gen: Long) = GenStore.genDir(root, gen)
   private def indexDir(root: String, gen: Long) = genRoot(root, gen) + "/index"
   /** The admission-store directory of one generation — the `path` that
     * [[Similarity.appendCodedBatch]]/[[Similarity.searchCodedStore]]
@@ -69,19 +70,7 @@ object VectorStore {
     java.nio.file.Paths.get(root, "_CURRENT")
 
   /** The generation readers currently see. */
-  def currentGen(root: String): Long =
-    new String(java.nio.file.Files.readAllBytes(pointerPath(root))).trim.toLong
-
-  // same tmp-write + ATOMIC_MOVE as the CDC `_CURRENT` pointer: readers
-  // see the old generation or the new one, never a torn pointer
-  private def writePointer(root: String, gen: Long): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    val tmp = java.nio.file.Paths.get(root, "_CURRENT.tmp")
-    java.nio.file.Files.write(tmp, gen.toString.getBytes)
-    java.nio.file.Files.move(tmp, pointerPath(root),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  def currentGen(root: String): Long = GenStore.currentGen(root)
 
   /** Create the store: persist the generation-1 index and point
     * `_CURRENT` at it. Idempotent (overwrite + pointer rewrite).
@@ -90,7 +79,7 @@ object VectorStore {
       cents: Array[Array[Double]],
       books: Array[Array[Array[Double]]]): Unit = {
     Similarity.saveIvfPqIndex(spark, cents, books, indexDir(root, 1L))
-    writePointer(root, 1L)
+    GenStore.writePointer(root, 1L)
   }
 
   /** Load one generation's index artifact. */
@@ -126,22 +115,14 @@ object VectorStore {
     */
   private[graft] def admitAt(spark: SparkSession, root: String, batch: DataFrame,
       idCol: String, vecCol: String, batchId: Long, asOfGen: Long,
-      nassign: Int = 2): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val sealedHwm = GenStore.compactedHwm(root, asOfGen)
-    require(batchId > sealedHwm,
-      s"batch_id=$batchId is at or below gen=$asOfGen's compacted high-water " +
-        s"mark $sealedHwm: compaction sealed it; replays of compacted batches " +
-        "are refused (a per-batch overwrite would replace the MERGED fragment)")
-    val (cents, books) = loadGenIndex(spark, root, asOfGen)
-    Similarity.appendCodedBatch(batch, idCol, vecCol, cents, books,
-      batchId, codedDir(root, asOfGen), nassign)
-    GenStore.requireStillNotQuiesced(root, s"admit of batch_id=$batchId")
-    val now = currentGen(root)
-    if (now != asOfGen) throw new IllegalStateException(
-      s"admit of batch_id=$batchId raced a refit: wrote under gen=$asOfGen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      nassign: Int = 2): Unit =
+    GenStore.fenced(root, batchId, GenStore.Data("replays of compacted " +
+        "batches are refused (a per-batch overwrite would replace the " +
+        "MERGED fragment)"), Some(asOfGen), raced = "refit") { gen =>
+      val (cents, books) = loadGenIndex(spark, root, gen)
+      Similarity.appendCodedBatch(batch, idCol, vecCol, cents, books,
+        batchId, codedDir(root, gen), nassign)
+    }
 
   // -------------------------------------------------------------------------
   // DELETION (takedown): pending delete sets as `gen=N/deletes/
@@ -177,25 +158,13 @@ object VectorStore {
     * ordered-delete rule; default: unbounded — plain takedown).
     */
   def admitDeletes(spark: SparkSession, root: String, ids: DataFrame,
-      idCol: String, batchId: Long, hwm: Long = Long.MaxValue): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val gen = currentGen(root)
-    val dhwm = GenStore.deletesHwm(root, gen)
-    require(batchId > dhwm,
-      s"delete batch_id=$batchId is at or below gen=$gen's delete-id " +
-        s"high-water mark $dhwm: a federation merge renumbered carried " +
-        "delete fragments into that id space — admitting under one of " +
-        "those ids would clobber a pending takedown; use a fresh id above " +
-        "the mark")
-    ids.select(col(idCol).cast("long").as("cid")).distinct()
-      .withColumn("hwm", lit(hwm))
-      .write.mode("overwrite").parquet(s"${deletesDir(root, gen)}/batch_id=$batchId")
-    GenStore.requireStillNotQuiesced(root, s"delete batch_id=$batchId")
-    val now = currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"delete batch_id=$batchId raced a refit/compaction: wrote under " +
-        s"gen=$gen but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      idCol: String, batchId: Long, hwm: Long = Long.MaxValue): Unit =
+    GenStore.fenced(root, batchId, GenStore.Deletes,
+        raced = "refit/compaction") { gen =>
+      ids.select(col(idCol).cast("long").as("cid")).distinct()
+        .withColumn("hwm", lit(hwm))
+        .write.mode("overwrite").parquet(s"${deletesDir(root, gen)}/batch_id=$batchId")
+    }
 
   /** UPSERT one batch of vectors: a SCOPED delete at `hwm = batchId -
     * 1` (masks every copy admitted so far; nothing, harmlessly, for a
@@ -305,14 +274,8 @@ object VectorStore {
     coded.filter(col("cell") === element_at(
       Similarity.bestCells(VectorFunctions.unit(col("cv")), cents, 1), 1))
 
-  private def listBatchIds(spark: SparkSession, coded: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(coded)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong).sorted
-  }
+  private def listBatchIds(spark: SparkSession, dir: String): Seq[Long] =
+    GenStore.listBatchIds(spark, dir)
 
   /** Batch ids already present under a generation's coded dir — for
     * generation N+1 mid-migration, the migrated prefix.
@@ -397,7 +360,7 @@ object VectorStore {
           .write.mode("overwrite").parquet(s"${deletesDir(root, toGen)}/batch_id=$i")
       }
     sweepDeletes()
-    writePointer(root, toGen)
+    GenStore.writePointer(root, toGen)
     sweepDeletes()
     val stragglers = listBatchIds(spark, codedDir(root, toGen - 1)).toSet -- got
     stragglers.toSeq.sorted.foreach(
@@ -566,7 +529,7 @@ object VectorStore {
     }
     sweep()
     GenStore.seal(root, ng, hwm)
-    writePointer(root, ng)
+    GenStore.writePointer(root, ng)
     sweep() // the list->publish window, converged post-publish
     ng
   }
@@ -681,20 +644,17 @@ object VectorStore {
     1L
   }
 
-  /** The continuous-compaction policy over [[compactGen]]
-    * ([[InvertedIndex.compactIfFragmented]]'s shape): compact once
+  /** The continuous-compaction policy ([[GenStore.compactIfFragmented]])
+    * over [[compactGen]] and the coded fragments: compact once
     * `maxFragments` accumulate. Returns the new generation when it
     * fired. Layout-only, so it composes freely with the refit policy
     * ([[needsRefit]]) — drift decides WHEN the geometry changes,
     * fragmentation decides when the files do.
     */
   def compactIfFragmented(spark: SparkSession, root: String,
-      maxFragments: Int): Option[Long] = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    val gen = currentGen(root)
-    if (listBatchIds(spark, codedDir(root, gen)).size < maxFragments) None
-    else Some(compactGen(spark, root, gen))
-  }
+      maxFragments: Int): Option[Long] =
+    GenStore.compactIfFragmented(spark, root, maxFragments, "/coded")(
+      compactGen(spark, root, _))
 
   /** The COMPACTION-POLICY predicate — the layout twin of
     * [[needsRefit]], and the contract that bounds the pending-takedown
@@ -710,23 +670,13 @@ object VectorStore {
     * early, never late.
     */
   def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    require(maxPendingFraction > 0, "maxPendingFraction must be positive")
-    val gen = currentGen(root)
-    val ids = listBatchIds(spark, codedDir(root, gen))
-    if (ids.isEmpty) false
-    else if (ids.size >= maxFragments) true
-    else {
-      val pending = GenStore.footerRowCount(spark, Seq(deletesDir(root, gen)))
-      pending > 0 && {
-        val vectors = spark.read.parquet(s"${codedDir(root, gen)}_stats")
-          .agg(coalesce(sum(col("n_vectors")), lit(0L)))
-          .head().getLong(0)
-        pending.toDouble >= maxPendingFraction * vectors
-      }
+      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean =
+    GenStore.needsCompaction(spark, root, maxFragments, "/coded",
+        Some(maxPendingFraction)) { (dir, _) =>
+      spark.read.parquet(s"$dir/coded_stats")
+        .agg(coalesce(sum(col("n_vectors")), lit(0L)))
+        .head().getLong(0)
     }
-  }
 
   /** Run [[compactGen]] when [[needsCompaction]] says so. */
   def compactIfNeeded(spark: SparkSession, root: String,
@@ -735,7 +685,7 @@ object VectorStore {
     if (!needsCompaction(spark, root, maxFragments, maxPendingFraction)) None
     else Some(compactGen(spark, root, currentGen(root)))
 
-  /** The maintenance dashboard row ([[KeySetStore.maintenanceStatus]]'s
+  /** The maintenance dashboard row ([[GenStore.fragmentStatus]]'s
     * shape): data cardinality is the admitted-vector count from the KB
     * stats fragments (the [[needsRefit]] read), pending is the
     * delete-marker footer count.

@@ -380,35 +380,45 @@ object EventStreams {
     * [[graft.operators.InvertedIndex.compactIfFragmented]] merges the
     * fragments into a new generation once `maxFragments` accumulate —
     * the continuous form of the q143 compactor, bounding read
-    * amplification at crawl cadence with no operator in the loop.
-    *
-    * Retry semantics under the seal: a REPLAYED micro-batch (sink
-    * crash after the admission but before the checkpoint commit) whose
-    * id the meantime compaction already sealed is a NO-OP — its rows
-    * are durably inside the compacted fragment (the policy runs only
-    * after its admission completed; single-writer discipline excludes
-    * concurrent compactors), so skipping is exactness, not loss. An
-    * UNSEALED replay overwrites its own directories as always.
+    * amplification at crawl cadence with no operator in the loop. Cold
+    * start and sealed replays as every compacting sink
+    * ([[compactingSink]]).
     */
   def indexIngestCompacting(
       docs: DataFrame, idCol: String, toksCol: String, bucketSize: Long,
       root: String, checkpointDir: String,
-      maxFragments: Int): org.apache.spark.sql.streaming.StreamingQuery = {
-    // cold start only: a RESTARTED stream must keep the advanced pointer
-    // (a plain initStore rewrites _CURRENT=1, which would resurrect a
-    // compacted-away generation for readers)
-    graft.operators.GenStore.initIfAbsent(root)
-    docs.writeStream
+      maxFragments: Int): org.apache.spark.sql.streaming.StreamingQuery =
+    compactingSink(docs, root, checkpointDir) { (spark, batch, batchId) =>
+      import graft.operators.InvertedIndex
+      InvertedIndex.admitBatch(spark, batch, idCol, toksCol,
+        bucketSize, batchId, root)
+      InvertedIndex.compactIfFragmented(spark, root, maxFragments)
+    }
+
+  /** The compacting sink every `*IngestCompacting` stream shares: a
+    * cold-start init of generation 1 (`coldStart`; a RESTARTED stream
+    * keeps the advanced pointer — a plain init would resurrect a
+    * compacted-away generation for readers), then per micro-batch the
+    * store's admit-then-compact `step`. A micro-batch at or below the
+    * compacted high-water mark is a SEALED REPLAY (sink crash after the
+    * admission but before the checkpoint commit, with a compaction
+    * sealing its id meanwhile) and is skipped: its rows are durably
+    * inside the compacted fragment (the policy runs only after its
+    * admission completed; single-writer discipline excludes concurrent
+    * compactors), so skipping is exactness, not loss. An UNSEALED
+    * replay overwrites its own fragment as always.
+    */
+  private def compactingSink(frame: DataFrame, root: String,
+      checkpointDir: String, coldStart: Boolean = true)(
+      step: (SparkSession, DataFrame, Long) => Unit):
+      org.apache.spark.sql.streaming.StreamingQuery = {
+    import graft.operators.GenStore
+    if (coldStart) GenStore.initIfAbsent(root)
+    frame.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.InvertedIndex
-        val spark = batch.sparkSession
-        if (batchId > InvertedIndex.compactedHwm(root, InvertedIndex.currentGen(root))) {
-          InvertedIndex.admitBatch(spark, batch, idCol, toksCol,
-            bucketSize, batchId, root)
-          InvertedIndex.compactIfFragmented(spark, root, maxFragments)
-          ()
-        } // else: sealed replay — rows already in the compacted fragment
+        if (batchId > GenStore.compactedHwm(root, GenStore.currentGen(root)))
+          step(batch.sparkSession, batch, batchId)
       }
       .start()
   }
@@ -431,18 +441,12 @@ object EventStreams {
       vectors: DataFrame, idCol: String, vecCol: String,
       root: String, checkpointDir: String, maxFragments: Int,
       nassign: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{GenStore, VectorStore}
-        val spark = batch.sparkSession
-        if (batchId > GenStore.compactedHwm(root, VectorStore.currentGen(root))) {
-          VectorStore.admit(spark, root, batch, idCol, vecCol, batchId, nassign)
-          VectorStore.compactIfFragmented(spark, root, maxFragments)
-          ()
-        } // else: sealed replay — rows already in the compacted fragment
-      }
-      .start()
+    compactingSink(vectors, root, checkpointDir, coldStart = false) {
+      (spark, batch, batchId) =>
+        import graft.operators.VectorStore
+        VectorStore.admit(spark, root, batch, idCol, vecCol, batchId, nassign)
+        VectorStore.compactIfFragmented(spark, root, maxFragments)
+    }
 
   /** Streaming KEY-SET admission with the compaction policy — the same
     * pattern on the dedup stores ([[graft.operators.KeySetStore]]):
@@ -456,21 +460,12 @@ object EventStreams {
     */
   def keySetIngestCompacting(
       keys: DataFrame, root: String, checkpointDir: String,
-      maxFragments: Int): org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenStore.initIfAbsent(root)
-    keys.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{GenStore, KeySetStore}
-        val spark = batch.sparkSession
-        if (batchId > GenStore.compactedHwm(root, GenStore.currentGen(root))) {
-          KeySetStore.admitBatch(batch, batchId, root)
-          KeySetStore.compactIfFragmented(spark, root, maxFragments)
-          ()
-        } // else: sealed replay — keys already in the compacted fragment
-      }
-      .start()
-  }
+      maxFragments: Int): org.apache.spark.sql.streaming.StreamingQuery =
+    compactingSink(keys, root, checkpointDir) { (spark, batch, batchId) =>
+      import graft.operators.KeySetStore
+      KeySetStore.admitBatch(batch, batchId, root)
+      KeySetStore.compactIfFragmented(spark, root, maxFragments)
+    }
 
   /** Per-sink LANE-PROGRESS file at a store root: the highest remapped
     * batch id sink `sinkId` has fully admitted there — what lets a
@@ -823,22 +818,13 @@ object EventStreams {
       events: DataFrame, keyCols: Seq[String], valueCol: String,
       root: String, checkpointDir: String, maxFragments: Int,
       lgK: Int = graft.operators.SketchStore.DefaultLgK):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenStore.initIfAbsent(root)
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{GenStore, SketchStore}
-        val spark = batch.sparkSession
-        if (batchId > GenStore.compactedHwm(root, GenStore.currentGen(root))) {
-          SketchStore.admitBatch(spark, batch, keyCols, valueCol, batchId,
-            root, lgK)
-          SketchStore.compactIfFragmented(spark, root, keyCols, maxFragments)
-          ()
-        } // else: sealed replay — registers already unioned into the fragment
-      }
-      .start()
-  }
+      org.apache.spark.sql.streaming.StreamingQuery =
+    compactingSink(events, root, checkpointDir) { (spark, batch, batchId) =>
+      import graft.operators.SketchStore
+      SketchStore.admitBatch(spark, batch, keyCols, valueCol, batchId,
+        root, lgK)
+      SketchStore.compactIfFragmented(spark, root, keyCols, maxFragments)
+    }
 
   /** Streaming FREQUENCY admission with the compaction policy — the
     * same pattern on the Misra-Gries store: each micro-batch summarizes
@@ -849,21 +835,12 @@ object EventStreams {
   def frequencyIngestCompacting(
       rows: DataFrame, keyCol: String, m: Int,
       root: String, checkpointDir: String, maxFragments: Int):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenStore.initIfAbsent(root)
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{GenStore, HeavyHitters}
-        val spark = batch.sparkSession
-        if (batchId > GenStore.compactedHwm(root, GenStore.currentGen(root))) {
-          HeavyHitters.admitBatch(spark, batch, keyCol, m, batchId, root)
-          HeavyHitters.compactIfFragmented(spark, root, m, maxFragments)
-          ()
-        } // else: sealed replay — counts already pruned into the fragment
-      }
-      .start()
-  }
+      org.apache.spark.sql.streaming.StreamingQuery =
+    compactingSink(rows, root, checkpointDir) { (spark, batch, batchId) =>
+      import graft.operators.HeavyHitters
+      HeavyHitters.admitBatch(spark, batch, keyCol, m, batchId, root)
+      HeavyHitters.compactIfFragmented(spark, root, m, maxFragments)
+    }
 
   /** Streaming QUANTILE admission with the compaction policy — the
     * family pattern on the histogram store ([[graft.operators
@@ -878,22 +855,13 @@ object EventStreams {
       rows: DataFrame, keyCols: Seq[String], valueCol: String,
       lo: Double, width: Double, nbins: Int,
       root: String, checkpointDir: String, maxFragments: Int):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenStore.initIfAbsent(root)
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{GenStore, QuantileStore}
-        val spark = batch.sparkSession
-        if (batchId > GenStore.compactedHwm(root, GenStore.currentGen(root))) {
-          QuantileStore.admitBatch(spark, batch, keyCols, valueCol,
-            lo, width, nbins, batchId, root)
-          QuantileStore.compactIfFragmented(spark, root, keyCols, maxFragments)
-          ()
-        } // else: sealed replay — counts already summed into the fragment
-      }
-      .start()
-  }
+      org.apache.spark.sql.streaming.StreamingQuery =
+    compactingSink(rows, root, checkpointDir) { (spark, batch, batchId) =>
+      import graft.operators.QuantileStore
+      QuantileStore.admitBatch(spark, batch, keyCols, valueCol,
+        lo, width, nbins, batchId, root)
+      QuantileStore.compactIfFragmented(spark, root, keyCols, maxFragments)
+    }
 
   def initCdcState(initial: DataFrame, stateDir: String): Unit = {
     initial.write.mode("overwrite").parquet(s"$stateDir/v0")
